@@ -1,0 +1,1 @@
+"""Benchmark for polario_spark: seeded workloads, end-to-end and per-layer metrics."""
