@@ -19,9 +19,10 @@ All math is built-in higher-order functions — JVM-side, no Python.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from polario_spark.functions import text as TXT
@@ -1785,55 +1786,51 @@ def default_stride_centroids(
     )
 
 
-def kmeans_centroids(
+def kmeans_centroid_matrix(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iters: int = 3,
     n_hint: Optional[int] = None,
-    return_matrix: bool = False,
-):
-    """Lloyd refinement of IVF centroids: (cid, __cent), no RNG.
+) -> tuple:
+    """Lloyd refinement of IVF centroids, returned as the driver-side
+    ``(ids, matrix, norms)`` triplet (see ``_centroid_triplet``), no RNG.
 
     Initialization is the same deterministic stride subset ``ivf_topk``
     uses by default, then ``iters`` rounds of assign + recompute-means
     tighten the cells. No RNG anywhere — but true bitwise reproducibility
     holds only in a single-JVM session (pinned by pytest): the centroid
-    means are float ``avg()`` aggregates whose partial-merge order
-    follows shuffle-fetch order, so on a multi-executor cluster
-    bitwise-different means can flip a near-tie argmax assignment. The
-    registry entry therefore MATERIALIZES the computed centroids to
-    parquet and oracles the probe+search over that table — the oracle
-    never depends on replaying the refinement.
+    means are float sums whose partial-merge order follows shuffle-fetch
+    order, so on a multi-executor cluster bitwise-different means can
+    flip a near-tie argmax assignment. The registry entry therefore
+    MATERIALIZES the computed centroids to parquet and oracles the
+    probe+search over that table — the oracle never depends on replaying
+    the refinement.
 
-    Scale shape per round (round-10 GEMM rewrite — the MLlib KMeans
-    structure): the round's centroid matrix lives DRIVER-SIDE as numpy
-    (K ~ sqrt(n) rows x dim — see _collect_centroid_matrix for the size
-    argument) and is broadcast into ONE job per round: GEMM-argmax each
-    Arrow batch of the corpus (``_gemm_assign_frame`` — replacing the
-    interpreted per-(vector, centroid) HOF fold, 26.9 s/pass at the
-    volume probe's x100 point), posexplode the assignments to (cell,
-    pos) partial sums — map-side combine collapses them to |cells| x dim
-    rows per task before the exchange — and collect the K x dim means
-    straight back to the driver for the next round. No per-round
-    localCheckpoint (the numpy handoff already severs lineage — each
-    round's plan is the constant-depth scan -> GEMM -> agg), no
-    per-round dup-collapse (the canonical frame is built once, and its
-    agg is the only corpus-volume exchange per round).
+    Scale shape per round (the MLlib KMeans structure): the round's
+    centroid matrix lives DRIVER-SIDE as numpy (K ~ sqrt(n) rows x dim —
+    see _collect_centroid_matrix for the size argument) and is broadcast
+    into ONE job per round: GEMM-argmax each Arrow batch of the corpus
+    and emit per-task (cell, partial sum) rows (``_gemm_partial_means``),
+    so the round's exchange carries touched-cells x (dim+1) rows per task,
+    not the corpus; the K x dim means come straight back to the driver
+    for the next round. The final round's triplet IS what
+    ``_collect_centroid_matrix(kmeans_centroids(...))`` would rebuild —
+    float64 survives the createDataFrame round-trip exactly — so callers
+    that need the matrix take it here without a collect job.
 
-    Input rows are canonicalized once (``canonical_vectors``): duplicate
-    ids contribute ONE vector to every mean and one assignment row —
-    matching the dup-collapse contract of assign_cells/the oracles.
+    Input rows are canonicalized once (``canonical_vectors`` semantics):
+    duplicate ids contribute ONE vector to every mean and one assignment
+    row — matching the dup-collapse contract of assign_cells/the oracles.
+    The canonical frame carries each id's raw multiplicity ``__c`` so the
+    init-stride count rides the init collect (``_stride_centroid_matrix``),
+    and is materialized once (lazy localCheckpoint: the first job stores
+    it, every Lloyd round reads the stored partitions instead of
+    re-running the dup-collapse exchange; release_cached_residue sweeps
+    the blocks).
     """
-    import numpy as np
-
     corpus = ensure_parallelism(corpus)
     spark = corpus.sparkSession
-    # Round 16 (opt): carry each canonical row's raw multiplicity so the
-    # init-stride count can ride the SAME job as the init-centroid
-    # collect (the fused-job trick of collect_stride_centroids); the
-    # loop's GEMM passes prune to __v, so the extra int column costs
-    # checkpoint storage only.
     vecs = (
         corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("__v"))
         .groupBy("nid")
@@ -1843,83 +1840,21 @@ def kmeans_centroids(
             F.expr("transform(__v, x -> cast(x as double))").alias("__v"),
             "__c",
         )
-    )
-    # Round 15 (opt): materialize the canonical frame ONCE — every Lloyd
-    # round's plan otherwise re-executes scan -> repartition -> the
-    # dup-collapse agg, i.e. the loop's only corpus-volume exchange runs
-    # `iters` times instead of once (guide §2.4 remove shuffles; the
-    # MLlib KMeans contract likewise requires its input cached). Lazy
-    # localCheckpoint: materializes under the first round's action,
-    # rounds 2+ read the stored partitions; release_cached_residue
-    # sweeps the blocks between bench runs.
-    vecs = vecs.localCheckpoint(eager=False)
-    cent_np = None
-    if n_hint is not None and n_hint > 0:
-        # fused init (one job, which also materializes the checkpoint):
-        # exact raw count = sum of per-id multiplicities; candidates at
-        # the hint-guessed stride. Same fallback contract as
-        # collect_stride_centroids: a true count in a lower power-of-4
-        # bracket than the hint makes the candidate set incomplete.
-        guess = adaptive_centroid_stride(n_hint)
-        row = (
-            vecs.groupBy()
-            .agg(
-                F.sum("__c").alias("n"),
-                F.collect_list(
-                    F.when(F.col("nid") % guess == 0, F.struct("nid", "__v"))
-                ).alias("cand"),
-            )
-            .collect()[0]
-        )
-        init_stride = adaptive_centroid_stride(row["n"] or 0)
-        if init_stride >= guess:
-            pairs = sorted(
-                (r["nid"], r["__v"])
-                for r in (row["cand"] or [])
-                if r["nid"] % init_stride == 0
-            )
-            ids = np.array([p[0] for p in pairs], np.int64)
-            if pairs:
-                mat = np.stack([np.asarray(p[1], np.float64) for p in pairs])
-                norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-                cent_np = (ids, mat, norms)
-            else:
-                cent_np = (ids, np.empty((0, 0)), np.empty(0))
-        else:
-            cent_np = _collect_centroid_matrix(
-                vecs.filter(F.col("nid") % init_stride == 0).select(
-                    F.col("nid").alias("cid"), F.col("__v").alias("__cent")
-                )
-            )
-    if cent_np is None:
-        init_stride = adaptive_centroid_stride(corpus.count())
-        cent_np = _collect_centroid_matrix(
-            vecs.filter(F.col("nid") % init_stride == 0).select(
-                F.col("nid").alias("cid"), F.col("__v").alias("__cent")
-            )
-        )
-    mean_rows: list = []
+    ).localCheckpoint(eager=False)
+    cent_np = _stride_centroid_matrix(vecs, n_hint, corpus.count)
     for _ in range(iters):
         # round-owned broadcast: the collect below is the ONLY consumer
         # of this round's partials, so the K x dim blob is released
-        # eagerly instead of waiting for closure GC (advisor r10)
+        # eagerly instead of waiting for closure GC
         bc = spark.sparkContext.broadcast(cent_np)
         try:
-            # Round 11: the round's exchange carries PER-TASK PARTIALS
-            # (touched-cells x (dim+1) rows per task), not the corpus —
-            # the earlier posexplode shape shuffled n x dim scalar rows
-            # per round (320M at the x100 probe point), which was the
-            # loop's dominant cost once the GEMM removed the assignment
-            # cost. Sum partials per (cell, pos), then divide by the
-            # count slot driver-side. Float summation order differs from
-            # the old per-value avg() by design — the registry entry
-            # materializes the refined centroids, so both engines always
-            # consume the same bytes (see the determinism note above).
-            partials = _gemm_partial_means(vecs, bc)
+            # Sum partials per (cell, pos), then divide by the count slot.
+            # Float summation order is the kernel's, not a per-value
+            # avg() — the registry entry materializes the refined
+            # centroids, so both engines consume the same bytes.
             mean_rows = (
-                partials.select(
-                    "cell", F.posexplode("part").alias("pos", "x")
-                )
+                _gemm_partial_means(vecs, bc)
+                .select("cell", F.posexplode("part").alias("pos", "x"))
                 .groupBy("cell", "pos")
                 .agg(F.sum("x").alias("s"))
                 .groupBy("cell")
@@ -1940,70 +1875,61 @@ def kmeans_centroids(
             bc.unpersist(blocking=False)
         if not mean_rows:  # empty corpus / empty centroid init
             break
-        mean_rows.sort(key=lambda r: r["cid"])
-        ids = np.array([r["cid"] for r in mean_rows], np.int64)
-        mat = np.stack([np.asarray(r["__cent"], np.float64) for r in mean_rows])
-        cent_np = (ids, mat, np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12))
-    # Round 16 (opt): the loop's final ``cent_np`` IS the triplet
-    # ``_collect_centroid_matrix`` would rebuild from the returned frame
-    # (same mean_rows, same cid sort, same norm clamp; float64 survives
-    # the createDataFrame round-trip exactly — pinned by
-    # tests/test_operators.py::test_kmeans_return_matrix_matches_collect),
-    # so callers that need the matrix can take it here instead of paying
-    # a collect job over the frame.
-    if not mean_rows:  # iters == 0 or empty corpus: the init set stands
-        ids, mat, _ = cent_np
-        frame = spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
-            "cid long, __cent array<double>",
-        )
-        return (frame, cent_np) if return_matrix else frame
-    frame = spark.createDataFrame(
-        [(r["cid"], list(r["__cent"])) for r in mean_rows],
+        cent_np = _centroid_triplet((r["cid"], r["__cent"]) for r in mean_rows)
+    return cent_np
+
+
+def centroid_frame(spark: SparkSession, cent_np) -> DataFrame:
+    """(cid, __cent) frame over a ``_centroid_triplet`` — the table form
+    the ``centroids=`` parameters and the materialized centroid table
+    take. float64 round-trips exactly, so
+    ``_collect_centroid_matrix(centroid_frame(spark, t))`` is ``t``."""
+    ids, mat, _ = cent_np
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
         "cid long, __cent array<double>",
     )
-    return (frame, cent_np) if return_matrix else frame
 
 
-def collect_stride_centroids(
+def kmeans_centroids(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    iters: int = 3,
     n_hint: Optional[int] = None,
-):
-    """The default-stride centroid matrix in ONE job (round 16): the
-    adaptive-stride ``count()`` and the centroid ``collect()`` were two
-    dependency-serial jobs per entry; this fuses them into a single
-    aggregate that returns (raw row count, canonical centroid candidates
-    at a guessed stride) together.
+) -> DataFrame:
+    """Lloyd-refined IVF centroids as a (cid, __cent) frame — the
+    ``centroid_frame`` of :func:`kmeans_centroid_matrix`."""
+    return centroid_frame(
+        corpus.sparkSession,
+        kmeans_centroid_matrix(corpus, id_col, vec_col, iters, n_hint),
+    )
 
-    ``n_hint`` is an UPPER BOUND on the corpus row count (parquet footer
-    rows — the corpus frames here are footer rows minus shed malformed
-    vectors). Because ``adaptive_centroid_stride`` is monotone, the
-    guessed stride from the hint is >= the true stride; when they are
-    EQUAL (the common case — no/few malformed rows) the collected
-    candidates at ``nid % guess == 0`` are exactly the centroid set and
-    the fused job suffices. When the shed rows push the true count into
-    a lower power-of-4 bracket (guess > stride: the candidate set would
-    be a SUBSET of what's needed), or with no hint at all, fall back to
-    the original two-job path. Either way the resulting (ids, matrix,
-    norms) triplet is identical to
-    ``_collect_centroid_matrix(default_stride_centroids(corpus))``:
-    candidates come from the same canonical ``max(__v)`` aggregate, the
-    stride from the same exact raw count, and the driver holds ~sqrt(n)
-    candidate rows — the same volume the plain collect already pays.
+
+def _stride_centroid_matrix(
+    vecs: DataFrame, n_hint: Optional[int], count: Callable[[], int]
+) -> tuple:
+    """Default-stride centroid triplet over a canonical ``(nid, __v,
+    __c)`` frame (``__c``: the id's raw row multiplicity), in ONE job
+    when ``n_hint`` allows: the raw row count (sum of ``__c``) and the
+    candidate collect at the hint-guessed stride share one aggregate.
+
+    Fallback bracket: ``n_hint`` must be an UPPER BOUND on the raw row
+    count (parquet footer rows — the corpus frames here are footer rows
+    minus shed malformed vectors). ``adaptive_centroid_stride`` is
+    monotone, so the guessed stride is >= the true one; when EQUAL (the
+    common case) the candidates are exactly the centroid set. When shed
+    rows push the true count into a lower power-of-4 bracket (guess >
+    stride) the candidates are a strict subset, so the set is collected
+    again at the true stride; with no hint, ``count()`` sizes the stride
+    first. Every path returns the same triplet: the same canonical
+    ``max(__v)`` rows at the stride of the same exact raw count.
     """
-    import numpy as np
-
+    n = None
     if n_hint is not None and n_hint > 0:
         guess = adaptive_centroid_stride(n_hint)
         row = (
-            corpus.select(
-                F.col(id_col).alias("nid"), F.col(vec_col).alias("__v")
-            )
-            .groupBy("nid")
-            .agg(F.max("__v").alias("__v"), F.count(F.lit(1)).alias("__c"))
-            .groupBy()
+            vecs.groupBy()
             .agg(
                 F.sum("__c").alias("n"),
                 F.collect_list(
@@ -2015,29 +1941,37 @@ def collect_stride_centroids(
         n = row["n"] or 0
         stride = adaptive_centroid_stride(n)
         if stride >= guess:
-            pairs = sorted(
+            return _centroid_triplet(
                 (r["nid"], r["__v"])
-                for r in (row["cand"] or [])
+                for r in row["cand"] or []
                 if r["nid"] % stride == 0
             )
-            ids = np.array([p[0] for p in pairs], np.int64)
-            if not pairs:
-                return ids, np.empty((0, 0)), np.empty(0)
-            try:
-                mat = np.stack(
-                    [np.asarray(p[1], np.float64) for p in pairs]
-                )
-            except ValueError as exc:
-                raise ValueError(
-                    "centroid vectors must share one dimension — shed "
-                    "malformed rows with well_formed_vectors(dim=...) "
-                    "before clustering"
-                ) from exc
-            norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-            return ids, mat, norms
+    stride = adaptive_centroid_stride(count() if n is None else n)
     return _collect_centroid_matrix(
-        default_stride_centroids(corpus, id_col, vec_col)
+        vecs.filter(F.col("nid") % stride == 0).select(
+            F.col("nid").alias("cid"), F.col("__v").alias("__cent")
+        )
     )
+
+
+def collect_stride_centroids(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_hint: Optional[int] = None,
+) -> tuple:
+    """The default-stride centroid triplet — bitwise
+    ``_collect_centroid_matrix(default_stride_centroids(corpus))`` — in
+    ONE job when ``n_hint`` (an upper bound on the corpus row count)
+    allows; see ``_stride_centroid_matrix`` for the fallback bracket.
+    The driver holds ~sqrt(n) candidate rows, the same volume the plain
+    collect pays."""
+    vecs = (
+        corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("__v"))
+        .groupBy("nid")
+        .agg(F.max("__v").alias("__v"), F.count(F.lit(1)).alias("__c"))
+    )
+    return _stride_centroid_matrix(vecs, n_hint, corpus.count)
 
 
 def _prepared_centroids(
@@ -2078,37 +2012,44 @@ def _prepared_centroids(
 ASSIGN_CENT_BLOCK = 4096
 
 
-def _collect_centroid_matrix(centroids: DataFrame):
-    """Driver-collect the centroid frame into ``(ids, matrix, norms)``
-    numpy triplet, sorted by cid ASCENDING so np.argmax's first-max
-    tie-break equals the (similarity DESC, cid ASC) order the fold
-    argmax and both oracles use.
-
-    The collect is the Spark MLlib KMeans pattern (clustering/KMeans
-    collects and broadcasts its center matrix every Lloyd round): K is
-    ~sqrt(n) by construction (``adaptive_centroid_stride``), so the
-    driver holds K x dim doubles — ~0.5 GB at n = 10^12, dim 64 — never
-    a corpus-sized collect. Norms are clamped at the shared NORM_EPS so
-    a zero centroid scores 0 against everything instead of NaN.
-    """
+def _centroid_triplet(pairs) -> tuple:
+    """``(ids, matrix, norms)`` numpy triplet from (cid, vector) pairs —
+    the one constructor every centroid producer (plain collect, fused
+    stride init, Lloyd round) goes through, so the GEMM kernels see
+    bitwise the same matrix for the same centroid set. Sorted by cid
+    ASCENDING so np.argmax's first-max tie-break equals the (similarity
+    DESC, cid ASC) order the fold argmax and both oracles use; norms are
+    clamped at the shared NORM_EPS so a zero centroid scores 0 against
+    everything instead of NaN."""
     import numpy as np
 
-    rows = centroids.select("cid", "__cent").collect()
-    rows.sort(key=lambda r: r["cid"])
-    ids = np.array([r["cid"] for r in rows], np.int64)
-    if len(rows) == 0:
+    pairs = sorted(pairs, key=lambda p: p[0])
+    ids = np.array([p[0] for p in pairs], np.int64)
+    if not pairs:
         return ids, np.empty((0, 0)), np.empty(0)
     try:
-        mat = np.stack(
-            [np.asarray(r["__cent"], np.float64) for r in rows]
-        )
+        mat = np.stack([np.asarray(p[1], np.float64) for p in pairs])
     except ValueError as exc:
         raise ValueError(
             "centroid vectors must share one dimension — shed malformed "
             "rows with well_formed_vectors(dim=...) before clustering"
         ) from exc
-    norms = np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
-    return ids, mat, norms
+    return ids, mat, np.maximum(np.sqrt((mat * mat).sum(axis=1)), 1e-12)
+
+
+def _collect_centroid_matrix(centroids: DataFrame) -> tuple:
+    """Driver-collect the centroid frame into its ``_centroid_triplet``.
+
+    The collect is the Spark MLlib KMeans pattern (clustering/KMeans
+    collects and broadcasts its center matrix every Lloyd round): K is
+    ~sqrt(n) by construction (``adaptive_centroid_stride``), so the
+    driver holds K x dim doubles — ~0.5 GB at n = 10^12, dim 64 — never
+    a corpus-sized collect.
+    """
+    return _centroid_triplet(
+        (r["cid"], r["__cent"])
+        for r in centroids.select("cid", "__cent").collect()
+    )
 
 
 def assign_cells(
@@ -2129,18 +2070,16 @@ def assign_cells(
     stride sized so K ~ sqrt(n) — reproducible, oracle-friendly);
     pass ``centroids=kmeans_centroids(corpus)`` for Lloyd-refined cells.
 
-    EXECUTION IS A BLAS GEMM (round-10, the round-9 verdict's named
-    lever): the centroid matrix is driver-collected and broadcast (the
-    Spark MLlib KMeans pattern — K ~ sqrt(n) rows, see
-    ``_collect_centroid_matrix``), and each Arrow batch of corpus vectors
-    computes its full batch x K cosine block as one float64 matrix
-    multiply inside ``mapInPandas``, blocked at ``ASSIGN_CENT_BLOCK``
-    centroids per step so memory stays bounded at any K. The round-9
-    fold-based plan (``assign_cells_fold``) evaluated an INTERPRETED
-    aggregate/zip_with dot per (vector, centroid) pair — the volume
-    probe measured it at 78M interpreted pairs / 26.9 s at the x100
-    point; the GEMM computes identical FLOPs vectorized (measured ~7x
-    faster there, see SCALE.md "GEMM assignment"). Zero shuffle: the
+    EXECUTION IS A BLAS GEMM: the centroid matrix is driver-collected
+    and broadcast (the Spark MLlib KMeans pattern — K ~ sqrt(n) rows,
+    see ``_collect_centroid_matrix``), and each Arrow batch of corpus
+    vectors computes its full batch x K cosine block as one float64
+    matrix multiply inside ``mapInPandas``, blocked at
+    ``ASSIGN_CENT_BLOCK`` centroids per step so memory stays bounded at
+    any K. The fold-based reference plan (``assign_cells_fold``)
+    evaluates an INTERPRETED aggregate/zip_with dot per (vector,
+    centroid) pair; the GEMM computes identical FLOPs vectorized
+    (measured ~7x faster, see SCALE.md "GEMM assignment"). Zero shuffle: the
     corpus stays where it is (the only exchange is the dup-collapse agg,
     one row per id — what the fold's groupBy(nid) already paid), and
     ``cell`` remains the natural partition key for a materialized index.
@@ -2149,8 +2088,8 @@ def assign_cells(
     positive scalar reorders nothing), but the per-row norm still
     normalizes the GEMM so emitted sims stay comparable; ``__nv`` is
     re-bound SPARK-SIDE after the kernel with the same clamped-fold
-    expression the search path always used, so downstream similarity
-    values are bitwise-unchanged from round 9.
+    expression the fold path uses, so downstream similarity values are
+    bitwise the fold path's.
 
     DETERMINISM: the BLAS reduction order can differ from the fold's
     sequential sum by ~1 ulp, so a genuinely NEAR-TIED pair of centroids
@@ -2158,7 +2097,7 @@ def assign_cells(
     equal sims) break identically (smallest cid: ids sorted ascending,
     argmax keeps the first max, cross-block update is strict >). Registry
     entries therefore MATERIALIZE the assignment and verify both engines
-    against the same bytes (``assigned_with_vectors`` /
+    against the same bytes (``queries._ivf_index`` /
     ``ivf_topk_sql(assigned_sql=...)``) — the materialized-assignment
     treatment the k-means centroid table already gets. In-session the
     kernel is deterministic (fixed BLAS, fixed shapes), pinned by pytest.
@@ -2168,13 +2107,11 @@ def assign_cells(
     argmax is garbage; every registry caller passes dim through.
     """
     corpus = ensure_parallelism(corpus)
-    # ``cent_np`` (round 16): a pre-collected (ids, matrix, norms) triplet
-    # (collect_stride_centroids / _collect_centroid_matrix) — entries
-    # that feed BOTH the assignment and the probe step collect once and
-    # pass it down, instead of paying two identical collect jobs per
-    # entry (guide §1.2 "don't compute things you throw away"). With a
-    # pre-collected default-stride matrix no centroid FRAME is needed at
-    # all (cell ids are corpus ids — long).
+    # ``cent_np``: a pre-collected (ids, matrix, norms) triplet
+    # (collect_stride_centroids / kmeans_centroid_matrix) — callers that
+    # feed BOTH the assignment and the probe step collect once and pass
+    # it down. With a pre-collected matrix no centroid FRAME is needed
+    # at all (cell ids are corpus ids — long).
     if centroids is None and cent_np is None:
         centroids = default_stride_centroids(corpus, id_col, vec_col)
     vecs = canonical_vectors(corpus, id_col, vec_col)
@@ -2203,14 +2140,10 @@ def probe_cells(
 ) -> DataFrame:
     """(qid, cell) probe set: each query's ``nprobe`` nearest centroids
     under (cosine DESC, cid ASC) — the IVF probe-selection step as a
-    blocked GEMM, the same treatment ``assign_cells`` got in round 10
-    (probe selection IS a top-P generalization of the argmax).
-
-    The former plan evaluated one interpreted HOF dot per (query,
-    centroid) pair and ranked them in a window — queries x K ~ n^1.5/97
-    rows (3.6M at the x300 probe point), the last interpreted
-    superlinear term in the IVF family after the search GEMM. Here the
-    centroid matrix broadcasts driver-side (MLlib KMeans pattern,
+    blocked GEMM, like ``assign_cells`` (probe selection IS a top-P
+    generalization of the argmax) — not one interpreted dot per (query,
+    centroid) pair ranked in a window, which is queries x K ~ n^1.5/97
+    rows. The centroid matrix broadcasts driver-side (MLlib KMeans pattern,
     K ~ sqrt(n)) and each Arrow batch of queries keeps a running top-P
     across ASSIGN_CENT_BLOCK-sized GEMM blocks.
 
@@ -2223,8 +2156,8 @@ def probe_cells(
     exactly like the assignment index.
 
     ``queries_from`` injects the query source frame (columns nid, __v)
-    — entries pass the materialized assignment so the stride filter
-    pushes into the index scan; default is the canonical corpus.
+    — the quantized index passes its dequantized vectors; default is the
+    canonical corpus.
     """
     corpus = ensure_parallelism(corpus)
     if nprobe is None:
@@ -2250,7 +2183,7 @@ def probe_cells(
         centroids.schema["cid"].dataType if centroids is not None
         else LongType()
     )
-    # shared pre-collected matrix, same contract as assign_cells (r16)
+    # shared pre-collected matrix, same contract as assign_cells
     if cent_np is None:
         cent_np = _collect_centroid_matrix(centroids)
     return _gemm_topp_frame(queries, cent_np, cid_type, nprobe)
@@ -2563,32 +2496,6 @@ def assign_cells_fold(
     )
 
 
-def assigned_with_vectors(
-    corpus: DataFrame,
-    cells: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Rebuild the ``assign_cells`` output frame from a MATERIALIZED
-    ``(nid, cell)`` table: join the canonical corpus vectors back on id
-    and re-bind the clamped norm Spark-side — bitwise what assign_cells
-    emits for the same cells.
-
-    This is how registry entries consume a persisted IVF index: the
-    assignment is computed once (GEMM), written as (nid, cell) — the
-    inverted file, cell being its natural partition key — and BOTH the
-    Spark search and the DuckDB oracle derive from those same bytes, so
-    a BLAS near-tie argmax flip between engines cannot split them (the
-    materialized-assignment treatment; see assign_cells DETERMINISM).
-    """
-    vecs = canonical_vectors(corpus, id_col, vec_col).withColumn(
-        "__nv", F.expr(VEC.norm_clamped("__v", "spark"))
-    )
-    return vecs.join(cells.select("nid", "cell"), "nid").select(
-        "nid", "__v", "__nv", "cell"
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -2620,20 +2527,19 @@ def ivf_topk(
     Returns (qid, nid, sim, rank) — the same shape as brute_force_topk,
     so callers can swap exact for approximate.
 
-    ``assigned`` lets callers inject a pre-built (materialized) inverted
-    file — the output of ``assign_cells`` written to parquet and rebuilt
-    via ``assigned_with_vectors`` — so the index is computed once, the
-    search reads the persisted cells, and the oracle verifies against the
-    SAME bytes (see assign_cells DETERMINISM). Default: assign in-flight.
+    ``assigned`` / ``probes`` let callers inject a pre-built
+    (materialized) inverted file and probe table — the output of
+    ``assign_cells`` / ``probe_cells`` written to parquet and read back
+    (``queries._ivf_index``) — so the index is computed once, the search
+    reads the persisted cells, and the oracle verifies against the SAME
+    bytes (see assign_cells DETERMINISM). Default: assign in-flight.
     """
     corpus = ensure_parallelism(corpus)
     # resolve the default centroid set ONCE so the adaptive-stride
     # count() job runs once and the probe cells / assignment cells come
-    # from the same frame (same subplan -> AQE ReusedExchange). Round 15:
-    # resolution is SKIPPED when both the assignment and the probe table
-    # arrive materialized — the search below never touches centroids
-    # then, and the eager default ran a wasted count() job per entry
-    # (measured ~0.1 s at sf0.1, one per IVF registry entry).
+    # from the same frame (same subplan -> AQE ReusedExchange); skipped
+    # when both the assignment and the probe table arrive materialized —
+    # the search below never touches centroids then.
     if centroids is None and (assigned is None or probes is None):
         centroids = default_stride_centroids(corpus, id_col, vec_col)
     # GEMM assignment shared with semdedup_dropped — see assign_cells for
@@ -2679,23 +2585,23 @@ def ivf_topk(
             .filter(F.col("__rn") <= IVF_NPROBE)
             .select("qid", "__q", "__nq", F.col("cid").alias("cell"))
         )
-    # Search: per-cell blocked GEMM with in-kernel per-query top-k
-    # partials (see _make_block_topk). The former shape — broadcast
-    # probes joined to the assignment, one interpreted HOF dot per
-    # (query, member) pair, then a corpus-wide window — evaluated
-    # queries x nprobe x |cell| interpreted 64-dim dots (~60M at the
-    # x300 probe point; measured alpha(100->300) = 1.77, 7.5 -> 52.4 s).
-    # Now each side rank-blocks within its cell, the block join ships
-    # bounded payloads, every dot is BLAS dgemm, and the final window
-    # ranks only ~queries x nprobe x k x blocks candidate rows. The
-    # assignment does shuffle by cell here (it did not under the
-    # broadcast join) — at scale that is the materialized inverted
-    # file's natural partitioning, and the shuffle is linear in the
-    # PROBED cells only (the join drops unprobed cells' blocks).
+    return _cell_topk(probes, assigned, k)
+
+
+def _cell_topk(probes: DataFrame, members: DataFrame, k: int) -> DataFrame:
+    """The IVF search tail shared by ``ivf_topk`` and
+    ``ivf_topk_quantized``: probes (cell, qid, __q) against members
+    (cell, nid, __v) as a per-cell blocked GEMM with in-kernel per-query
+    top-k partials (see _make_block_topk), ranked to (qid, nid, sim,
+    rank). Each side rank-blocks within its cell, the block join ships
+    bounded payloads, every dot is BLAS dgemm, and the final window
+    ranks only ~queries x nprobe x k x blocks candidate rows. The
+    members shuffle by cell — the materialized inverted file's natural
+    partitioning — and only PROBED cells' blocks survive the join."""
     qb = _cell_rank_blocks(
         probes.select("cell", "qid", "__q"), "qid", "__q", "__qids", "__qflat"
     )
-    mb = _cell_rank_blocks(assigned, "nid", "__v", "__nids", "__nflat")
+    mb = _cell_rank_blocks(members, "nid", "__v", "__nids", "__nflat")
     cand = (
         qb.drop("__blk")
         .join(mb.drop("__blk"), "cell")
@@ -2850,30 +2756,8 @@ def ivf_topk_quantized(
         dq.select(F.col("nid").alias("qid"), F.col("__qd").alias("__q")),
         "qid",
     )
-    qb = _cell_rank_blocks(
-        pq.select("cell", "qid", "__q"), "qid", "__q", "__qids", "__qflat"
-    )
-    mb = _cell_rank_blocks(
-        dq.select("cell", "nid", F.col("__qd").alias("__nv")),
-        "nid",
-        "__nv",
-        "__nids",
-        "__nflat",
-    )
-    cand = (
-        qb.drop("__blk")
-        .join(mb.drop("__blk"), "cell")
-        .mapInPandas(
-            _make_block_topk(k), schema="qid long, nid long, sim double"
-        )
-    )
-    w_top = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("nid").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w_top))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
+    return _cell_topk(
+        pq, dq.select("cell", "nid", F.col("__qd").alias("__v")), k
     )
 
 
@@ -2957,7 +2841,7 @@ def semdedup_dropped(
     # np.stack — pass dim to exclude them before assignment so neither
     # the centroid stride subset nor any block can contain one (opt-in:
     # the blocks themselves are dim-agnostic). ``assigned`` injects a
-    # materialized index (assigned_with_vectors) like ivf_topk's.
+    # materialized index (queries._ivf_index) like ivf_topk's.
     if dim is not None:
         corpus = well_formed_vectors(corpus, vec_col, dim)
     if assigned is None:

@@ -13,13 +13,21 @@ it is the identity and adds nothing to the plan; only when the input is
 under-partitioned does it insert one round-robin repartition, trading a
 shuffle of the (small, by construction) input for full-width execution of
 everything above it.
+
+``run_overlapped`` is the other half of the story: independent Spark
+actions (two index writes, two sink writes) submitted from separate
+driver threads, so the FIFO scheduler back-fills one job's task tail
+with the other's tasks.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+import threading
+from collections.abc import Callable
+from typing import Any, Optional
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
@@ -41,3 +49,39 @@ def ensure_parallelism(df: DataFrame, min_partitions: Optional[int] = None) -> D
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def run_overlapped(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run ``thunks`` concurrently, one driver thread each, and return
+    their results in submission order.
+
+    Every thunk runs to completion before anything is raised: a failed
+    write never leaves a sibling write running unobserved, and the
+    exception that surfaces is the first failure in submission order
+    (not whichever thread happened to be awaited first). Each thunk is
+    wrapped in ``inheritable_thread_target(spark)`` in the CALLER's
+    thread, so the jobs it launches carry the caller's local properties
+    — job group and description — instead of a bare pool thread's
+    empty ones.
+    """
+    results: list = [None] * len(thunks)
+    errors: list = [None] * len(thunks)
+
+    def run(i: int, thunk: Callable[[], Any]) -> None:
+        try:
+            results[i] = thunk()
+        except BaseException as exc:  # noqa: BLE001 - re-raised below
+            errors[i] = exc
+
+    threads = [
+        threading.Thread(target=inheritable_thread_target(spark)(run), args=(i, t))
+        for i, t in enumerate(thunks)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results

@@ -29,7 +29,7 @@ from collections.abc import Callable
 
 import pandas as pd
 from dataclasses import dataclass
-from typing import Optional
+from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,7 +44,7 @@ from polario_spark.operators.multimodal import (
     frame_sample,
     with_binary_payload,
 )
-from polario_spark.plans.parallelism import ensure_parallelism
+from polario_spark.plans.parallelism import ensure_parallelism, run_overlapped
 from polario_spark.sources.tables import footer_rows, load_table
 from polario_spark.streaming import events as streaming_events
 from polario_spark.streaming.events import hourly_counts
@@ -2317,120 +2317,178 @@ def dedup_embedding_cosine_lsh_sized(spark: SparkSession, sf_dir: str) -> DataFr
     ).orderBy("id_a", "id_b")
 
 
-#: Fixed on-disk home for each entry's materialized GEMM cell assignment
-#: (the inverted file): the Spark query writes (nid, cell) here and the
-#: DuckDB oracle reads the SAME bytes back, so the BLAS argmax is computed
-#: exactly once and a near-tie can never split the engines — the same
-#: treatment the k-means centroid table gets (see assign_cells
-#: DETERMINISM in operators/similarity.py). One path per (entry, corpus):
-#: the driver may interleave entries, and each oracle must see the bytes
-#: ITS Spark twin wrote. These constants bake the GATE corpus into the
-#: oracle strings at import time; the query functions recompute the same
-#: path from their runtime ``sf_dir`` (pinned equal for the gate corpus
-#: by tests/test_workdir.py), so a pytest run at sf0.001 and a gate
-#: mirror at sf0.01 in concurrent PROCESSES write disjoint dirs — the
-#: round-13-reproduced overwrite-then-read race between corpora is gone
-#: by construction (workdir.stable_work_path).
+#: Fixed on-disk homes of the IVF family's materialized tables — each
+#: entry's inverted file (``*_assign``), its probe table (``*_probes``)
+#: and the Lloyd-refined centroid table. The Spark query writes them
+#: (``_ivf_index``) and the DuckDB oracle reads the SAME bytes back, so no
+#: BLAS argmax, probe selection or iterative refinement is replayed in
+#: SQL and a near-tie can never split the engines (assign_cells /
+#: probe_cells DETERMINISM in operators/similarity.py). One path per
+#: (entry, corpus): the driver may interleave entries, each oracle must
+#: see the bytes ITS Spark twin wrote, and processes driving different
+#: corpora write disjoint dirs (workdir.stable_work_path). These
+#: constants bake the GATE corpus into the oracle strings at import time;
+#: ``_ivf_index`` recomputes the same paths from the runtime ``sf_dir``
+#: (pinned equal for the gate corpus by tests/test_workdir.py).
 _SEMDEDUP_ASSIGN_PATH = stable_work_path("semdedup_assign", _GATE_SF_DIR)
 _IVF_ASSIGN_PATH = stable_work_path("ivf_stride_assign", _GATE_SF_DIR)
 _IVF_KM_ASSIGN_PATH = stable_work_path("ivf_kmeans_assign", _GATE_SF_DIR)
 _IVF_PROBES_PATH = stable_work_path("ivf_stride_probes", _GATE_SF_DIR)
 _IVF_KM_PROBES_PATH = stable_work_path("ivf_kmeans_probes", _GATE_SF_DIR)
+_IVF_Q_ASSIGN_PATH = stable_work_path("ivf_quant_assign", _GATE_SF_DIR)
+_IVF_Q_PROBES_PATH = stable_work_path("ivf_quant_probes", _GATE_SF_DIR)
+_KMEANS_CENT_PATH = stable_work_path("kmeans_centroids", _GATE_SF_DIR)
 
 
-def _materialized_assignment(
+class IvfIndex(NamedTuple):
+    """A materialized IVF index, read back from its stable paths."""
+
+    #: the inverted file: (nid, __v, __nv, cell), or the int8 index
+    #: (nid, __qv, cell) when quantized
+    assigned: DataFrame
+    #: the (qid, cell) probe table; None when not built
+    probes: Optional[DataFrame]
+
+
+def _ivf_index(
     emb: DataFrame,
-    path: str,
-    centroids: "DataFrame | None" = None,
-    cent_np=None,
-) -> DataFrame:
-    """GEMM-assign cells, persist the (nid, __v, cell) inverted file to
-    ``path``, and rebuild the search-side frame from the persisted bytes
-    — shared by the three IVF-family entries.
+    sf_dir: str,
+    prefix: str,
+    *,
+    kmeans: bool = False,
+    quantized: bool = False,
+    probes: bool = True,
+) -> IvfIndex:
+    """Build the IVF index of the well-formed embeddings frame ``emb``,
+    persist it to ``{prefix}_assign`` / ``{prefix}_probes`` and read it
+    back — the one index-build path of the IVF-family entries.
 
-    The index stores the VECTORS, not just (nid, cell): that is what an
-    IVF index is (the cells hold their members' vectors), it lets the
-    search side and the oracle read one table with no join back to the
-    corpus, and both engines then consume literally identical vector
-    bytes. ``__nv`` is re-bound Spark-side with the same clamped-fold
-    expression assign_cells emits, so downstream sims are bitwise what
-    the in-flight frame would produce."""
+    Centroids are the default stride set (``collect_stride_centroids``)
+    or, with ``kmeans``, three Lloyd rounds (``kmeans_centroid_matrix``)
+    whose table is also written to ``kmeans_centroids`` for the oracle.
+    Either way the driver-side matrix is collected ONCE and feeds both
+    the assignment GEMM and the probe GEMM. The index stores the VECTORS
+    with their cells — what an IVF index is — so the search and the
+    oracle read one table with no join back to the corpus;
+    ``quantized`` stores them int8 (``similarity.quantized_index``).
+
+    The writes are independent jobs and overlap (``run_overlapped``).
+    Probe-query bit-identity makes that legal: the probe job sources its
+    queries from the canonical corpus frame, not from the written index.
+    The index's ``__v`` IS the canonical ``max(__v)`` (an exact,
+    order-independent lexicographic max, no float arithmetic), quantized
+    queries are the same pure column expressions the index applies, and
+    parquet round-trips float64 and int8 exactly — so the probe GEMM
+    consumes the index's query vectors bit for bit without waiting on
+    the assignment write.
+    """
     spark = emb.sparkSession
-    cells = similarity.assign_cells(
-        emb, "vec_id", "embedding", centroids=centroids, cent_np=cent_np
-    ).select("nid", "__v", "cell")
-    cells.write.mode("overwrite").parquet(prepare_stable_dir(path))
-    return (
-        spark.read.parquet(path)
-        .withColumn("__nv", F.expr(VEC.norm_clamped("__v", "spark")))
-        .select("nid", "__v", "__nv", "cell")
-    )
+    n_hint = _footer_rows(sf_dir, "embeddings")
+    if kmeans:
+        cent_np = similarity.kmeans_centroid_matrix(
+            emb, "vec_id", "embedding", iters=3, n_hint=n_hint
+        )
+    else:
+        cent_np = similarity.collect_stride_centroids(
+            emb, "vec_id", "embedding", n_hint=n_hint
+        )
+
+    def persist(df: DataFrame, kind: str) -> str:
+        path = stable_work_path(kind, sf_dir)
+        df.write.mode("overwrite").parquet(prepare_stable_dir(path))
+        return path
+
+    def write_centroids() -> None:
+        # repartition(1): the table is driver-sized (K ~ sqrt(n) rows),
+        # so parallelize()'s default slicing would commit one near-empty
+        # file per core. Not coalesce(1): that funnels every pickled
+        # slice through one task's sequential Python-worker round-trips;
+        # the shuffle keeps the Python side parallel and the single
+        # write task pure-JVM.
+        persist(
+            similarity.centroid_frame(spark, cent_np).repartition(1),
+            "kmeans_centroids",
+        )
+
+    def assign() -> DataFrame:
+        cells = similarity.assign_cells(
+            emb, "vec_id", "embedding", cent_np=cent_np
+        ).select("nid", "__v", "cell")
+        if quantized:
+            kept = persist(similarity.quantized_index(cells), f"{prefix}_assign")
+            return spark.read.parquet(kept)
+        # __nv re-bound with assign_cells' own clamped-norm expression:
+        # downstream sims are bitwise what the in-flight frame produces
+        return (
+            spark.read.parquet(persist(cells, f"{prefix}_assign"))
+            .withColumn("__nv", F.expr(VEC.norm_clamped("__v", "spark")))
+            .select("nid", "__v", "__nv", "cell")
+        )
+
+    def probe() -> DataFrame:
+        queries = None
+        if quantized:
+            queries = similarity.quantized_index(
+                similarity.canonical_vectors(emb, "vec_id", "embedding")
+                .withColumn("cell", F.lit(None).cast("long"))
+            ).select("nid", F.expr(similarity.dequant_expr("__qv")).alias("__v"))
+        table = similarity.probe_cells(
+            emb, "vec_id", "embedding", queries_from=queries, cent_np=cent_np
+        )
+        return spark.read.parquet(persist(table, f"{prefix}_probes"))
+
+    thunks = [assign, probe] if probes else [assign]
+    if kmeans:
+        thunks.insert(0, write_centroids)
+    built = run_overlapped(spark, *thunks)[int(kmeans):]
+    return IvfIndex(built[0], built[1] if probes else None)
 
 
-def _materialized_probes(
-    emb: DataFrame,
-    assigned: "DataFrame | None",
-    path: str,
-    centroids: "DataFrame | None" = None,
-    cent_np=None,
-) -> DataFrame:
-    """GEMM-select each query's nprobe nearest cells, persist the
-    (qid, cell) probe table to ``path``, and hand back the persisted
-    frame — the probe-selection twin of :func:`_materialized_assignment`
-    (round 11: probe selection was the last interpreted n^1.5 term in
-    the IVF family; the GEMM changes float summation order, so both
-    engines must read the same probe bytes — probe_cells DETERMINISM).
-
-    ``assigned=None`` (round 16): source the query vectors from the
-    canonical corpus frame instead of the materialized assignment. The
-    bytes are identical BY CONSTRUCTION — the index's ``__v`` IS the
-    canonical ``max(__v)`` aggregate (an exact, order-independent
-    lexicographic max, no float arithmetic) and parquet round-trips
-    float64 bit-exactly — so the probe GEMM consumes the same query
-    vectors either way (row-identity asserted in the r16 A/B and the
-    oracle gate). What it buys: the probe job no longer waits on the
-    assignment write+read, so the two materializations run as
-    INDEPENDENT jobs from a 2-thread pool (guide §2.6), the probe job's
-    corpus re-scan back-filling the assignment write's task tail. At
-    scale the probe-side query filter (nid % stride) pushes through the
-    canonical groupBy to the scan, so the extra exchange carries only
-    the ~1% query subset."""
-    spark = emb.sparkSession
-    probes = similarity.probe_cells(
-        emb,
-        "vec_id",
-        "embedding",
-        centroids=centroids,
-        queries_from=(
-            assigned.select("nid", "__v") if assigned is not None else None
-        ),
-        cent_np=cent_np,
-    )
-    probes.write.mode("overwrite").parquet(prepare_stable_dir(path))
-    return spark.read.parquet(path)
-
-
-def _probes_oracle(path: str) -> str:
-    """Oracle twin of :func:`_materialized_probes`: the probe table's
-    bytes joined back to the materialized assignment for the query
-    vectors (columns qid, __q, cell — what the search CTE expects)."""
-    return (
-        f"SELECT p.qid, a.__v AS __q, p.cell "
-        f"FROM read_parquet('{path}/*.parquet') p "
-        f"JOIN assigned a ON a.nid = p.qid"
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings corpus with malformed vectors shed at the scan, as
+    the oracles shed them: a NaN component would place its vector in an
+    engine-dependent cell, poison a Lloyd mean, or kill a quantize cast."""
+    return similarity.well_formed_vectors(
+        _t(spark, sf_dir, "embeddings"), "embedding", 64
     )
 
 
 def _assigned_oracle(path: str) -> str:
-    """Oracle-side twin of :func:`_materialized_assignment`: read the
-    materialized (nid, __v, cell) index directly — the index rows ARE
-    the canonical post-shed corpus (one row per distinct id), so no join
-    back to ``ec`` is needed and both engines consume the same bytes.
-    Columns (id, __v, cell); callers re-alias as their CTE expects."""
+    """Oracle twin of a persisted inverted file: the (nid, __v, cell)
+    index rows ARE the canonical post-shed corpus (one row per distinct
+    id), so no join back to ``ec`` is needed and both engines consume
+    the same bytes. Columns (id, __v, cell); callers re-alias as their
+    CTE expects."""
     return (
         f"SELECT t.nid AS id, (t.__v)::DOUBLE[] AS __v, t.cell "
         f"FROM read_parquet('{path}/*.parquet') t"
     )
+
+
+#: The oracles' corpus: malformed vectors shed at the scan (``_embeddings``).
+_EMB_SQL = (
+    f"(SELECT * FROM embeddings WHERE {similarity.well_formed_sql('embedding', 64)})"
+)
+
+
+def _ivf_oracle(assign_path: str, probes_path: str, **kw) -> str:
+    """Oracle of an ``ivf_topk`` entry over its persisted index: the
+    assignment read back as (nid, __v, cell) and the probe table's bytes
+    joined to it for the query vectors (qid, __q, cell)."""
+    return similarity.ivf_topk_sql(
+        _EMB_SQL, "vec_id", "embedding", 5,
+        assigned_sql=(
+            "SELECT id AS nid, __v, cell FROM ("
+            + _assigned_oracle(assign_path)
+            + ")"
+        ),
+        probes_sql=(
+            f"SELECT p.qid, a.__v AS __q, p.cell "
+            f"FROM read_parquet('{probes_path}/*.parquet') p "
+            f"JOIN assigned a ON a.nid = p.qid"
+        ),
+        **kw,
+    ) + "\nORDER BY qid, rank"
 
 
 @_register(
@@ -2452,91 +2510,34 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH entries: LSH buckets by random hyperplanes (recall tied to band
     collisions), SemDeDup buckets by data geometry (recall tied to
     cluster quality) — real pipelines run the latter when embeddings
-    already exist for other reasons.
-
-    Round 10: the cell assignment is the BLAS GEMM path, materialized to
-    a stable parquet index both engines verify against (see
-    _SEMDEDUP_ASSIGN_PATH)."""
-    emb = similarity.well_formed_vectors(
-        _t(spark, sf_dir, "embeddings"), "embedding", 64
-    )
-    # Round 16 (opt): fused stride-count + centroid collect (one job
-    # instead of two — see collect_stride_centroids); the assignment was
-    # resolving its own default inside assign_cells.
-    cent_np = similarity.collect_stride_centroids(
-        emb, "vec_id", "embedding", n_hint=_footer_rows(sf_dir, "embeddings")
-    )
-    assigned = _materialized_assignment(
-        emb, stable_work_path("semdedup_assign", sf_dir), cent_np=cent_np
-    )
+    already exist for other reasons. The cell assignment is the
+    materialized GEMM index both engines verify against (``_ivf_index``)."""
+    emb = _embeddings(spark, sf_dir)
+    assigned = _ivf_index(emb, sf_dir, "semdedup", probes=False).assigned
     return similarity.semdedup_dropped(emb, assigned=assigned).orderBy(
         "vec_id"
     )
 
 
-@_register(
-    "ann_ivf_topk",
-    similarity.ivf_topk_sql(
-        f"(SELECT * FROM embeddings WHERE {similarity.well_formed_sql('embedding', 64)})",
-        "vec_id", "embedding", 5,
-        assigned_sql=(
-            "SELECT id AS nid, __v, cell FROM ("
-            + _assigned_oracle(_IVF_ASSIGN_PATH)
-            + ")"
-        ),
-        probes_sql=_probes_oracle(_IVF_PROBES_PATH),
-    )
-    + "\nORDER BY qid, rank",
-)
+@_register("ann_ivf_topk", _ivf_oracle(_IVF_ASSIGN_PATH, _IVF_PROBES_PATH))
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-5 cosine neighbors — the scale path
-    complement to ann_topk_cosine's exact scan. Malformed vectors shed at
-    the scan both sides (round-8 probe): a NaN assignment cosine would
-    place the vector in an engine-dependent cell. Round 10: GEMM cell
-    assignment materialized to a stable parquet index both engines verify
-    against (_IVF_ASSIGN_PATH). Round 11: the probe table gets the same
-    GEMM + materialization treatment (_IVF_PROBES_PATH), and the search
-    itself is a per-cell blocked GEMM (ivf_topk). Recall rides nprobe
-    (~nprobe/K on unclustered data; measured curve 0.248@2 -> 0.943@24,
-    see similarity.IVF_NPROBE / SCALE.md) — size it before deploying."""
-    emb = similarity.well_formed_vectors(
-        _t(spark, sf_dir, "embeddings"), "embedding", 64
-    )
-    # Round 16 (opt, extends the r15 shared-centroid-frame fix): the
-    # stride count() + centroid collect() pair fuses
-    # into ONE job (collect_stride_centroids, footer-rows hint), the
-    # matrix is driver-collected ONCE and passed to both consumers (was
-    # one collect job each), and the two index writes — assignment and
-    # probes — run as independent jobs from a 2-thread pool (§2.6): the
-    # probe job sources its query vectors from the canonical corpus
-    # frame, which is bit-identical to the materialized assignment's
-    # __v (see _materialized_probes).
-    cent_np = similarity.collect_stride_centroids(
-        emb, "vec_id", "embedding", n_hint=_footer_rows(sf_dir, "embeddings")
-    )
-    assign_path = stable_work_path("ivf_stride_assign", sf_dir)
-    probes_path = stable_work_path("ivf_stride_probes", sf_dir)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_assigned = pool.submit(
-            _materialized_assignment, emb, assign_path, cent_np=cent_np
-        )
-        f_probes = pool.submit(
-            _materialized_probes, emb, None, probes_path, cent_np=cent_np
-        )
-        assigned, probes = f_assigned.result(), f_probes.result()
+    complement to ann_topk_cosine's exact scan. The GEMM cell assignment
+    and probe table are materialized indexes both engines verify against
+    (``_ivf_index``), and the search is a per-cell blocked GEMM
+    (ivf_topk). Recall rides nprobe (~nprobe/K on unclustered data;
+    measured curve 0.248@2 -> 0.943@24, see similarity.IVF_NPROBE /
+    SCALE.md) — size it before deploying."""
+    emb = _embeddings(spark, sf_dir)
+    idx = _ivf_index(emb, sf_dir, "ivf_stride")
     return similarity.ivf_topk(
-        emb, "vec_id", "embedding", 5, assigned=assigned, probes=probes
+        emb, "vec_id", "embedding", 5, assigned=idx.assigned, probes=idx.probes
     ).orderBy("qid", "rank")
 
 
 @_register(
     "ann_topk_quantized",
-    similarity.quantized_topk_sql(
-        f"(SELECT * FROM embeddings WHERE {similarity.well_formed_sql('embedding', 64)})",
-        "vec_id", "embedding", 5
-    )
+    similarity.quantized_topk_sql(_EMB_SQL, "vec_id", "embedding", 5)
     + "\nORDER BY qid, rank",
 )
 def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2547,23 +2548,10 @@ def ann_topk_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the int8 win here is memory and integer SIMD, not plan shape), so
     it exists to pin the exact integer-cosine semantics and as the
     recall reference. The scale path with the same quantized semantics
-    is ann_ivf_quantized_topk (probed cells only, n^1.5 work).
-    Malformed vectors shed at the scan both sides (a NaN component would
-    kill the NaN->BIGINT quantize cast under ANSI — round-8 probe)."""
-    emb = similarity.well_formed_vectors(
-        _t(spark, sf_dir, "embeddings"), "embedding", 64
-    )
-    return similarity.quantized_topk(emb, "vec_id", "embedding", 5).orderBy(
-        "qid", "rank"
-    )
-
-
-#: Materialized homes for the QUANTIZED inverted file and its probe table
-#: (see _SEMDEDUP_ASSIGN_PATH rationale — one path per (entry, corpus);
-#: constants bake the gate corpus for the oracle strings, functions
-#: recompute from runtime sf_dir).
-_IVF_Q_ASSIGN_PATH = stable_work_path("ivf_quant_assign", _GATE_SF_DIR)
-_IVF_Q_PROBES_PATH = stable_work_path("ivf_quant_probes", _GATE_SF_DIR)
+    is ann_ivf_quantized_topk (probed cells only, n^1.5 work)."""
+    return similarity.quantized_topk(
+        _embeddings(spark, sf_dir), "vec_id", "embedding", 5
+    ).orderBy("qid", "rank")
 
 
 @_register(
@@ -2597,165 +2585,37 @@ def ann_ivf_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization, GEMM argmax, or probe selection). Recall rides nprobe
     (~nprobe/K on unclustered data; measured curve 0.248@2 -> 0.943@24,
     see similarity.IVF_NPROBE / SCALE.md) — size it before deploying."""
-    emb = similarity.well_formed_vectors(
-        _t(spark, sf_dir, "embeddings"), "embedding", 64
-    )
-    q_assign_path = stable_work_path("ivf_quant_assign", sf_dir)
-    q_probes_path = stable_work_path("ivf_quant_probes", sf_dir)
-    # Round 16 (opt): the stride count() + centroid collect() fuse into
-    # ONE job shared by assignment + probe selection (was a count plus
-    # one collect job per consumer), and — like the float entry — the
-    # two index writes overlap from a 2-thread pool: the probe step's
-    # query vectors are dequant(quantize(canonical __v)), PURE
-    # deterministic column expressions of the canonical corpus (the
-    # assignment GEMM computes only the CELL, which the query side
-    # never reads), so computing them in-flight is bit-identical to
-    # reading them back from the materialized index (int8 survives
-    # parquet exactly; the quantize exprs are shared via
-    # quantized_index).
-    cent_np = similarity.collect_stride_centroids(
-        emb, "vec_id", "embedding", n_hint=_footer_rows(sf_dir, "embeddings")
-    )
-
-    def _write_qidx() -> DataFrame:
-        qidx = similarity.quantized_index(
-            similarity.assign_cells(
-                emb, "vec_id", "embedding", cent_np=cent_np
-            ).select("nid", "__v", "cell")
-        )
-        qidx.write.mode("overwrite").parquet(
-            prepare_stable_dir(q_assign_path)
-        )
-        return spark.read.parquet(q_assign_path)
-
-    def _write_probes() -> DataFrame:
-        q_inflight = similarity.quantized_index(
-            similarity.canonical_vectors(emb, "vec_id", "embedding")
-            .withColumn("cell", F.lit(None).cast("long"))
-        ).select(
-            "nid", F.expr(similarity.dequant_expr("__qv")).alias("__v")
-        )
-        probes = similarity.probe_cells(
-            emb, "vec_id", "embedding",
-            queries_from=q_inflight, cent_np=cent_np,
-        )
-        probes.write.mode("overwrite").parquet(
-            prepare_stable_dir(q_probes_path)
-        )
-        return spark.read.parquet(q_probes_path)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_assigned = pool.submit(_write_qidx)
-        f_probes = pool.submit(_write_probes)
-        assigned_q, probes = f_assigned.result(), f_probes.result()
+    emb = _embeddings(spark, sf_dir)
+    idx = _ivf_index(emb, sf_dir, "ivf_quant", quantized=True)
     return similarity.ivf_topk_quantized(
-        emb, "vec_id", "embedding", 5, assigned_q=assigned_q, probes=probes
+        emb, "vec_id", "embedding", 5, assigned_q=idx.assigned, probes=idx.probes
     ).orderBy("qid", "rank")
-
-
-#: Fixed on-disk home for the Lloyd-refined centroid table: the Spark query
-#: materializes centroids here, and the DuckDB oracle reads the SAME bytes
-#: back by literal path — so the hash gate covers the probe + search
-#: without replaying the iterative refinement in SQL.
-_KMEANS_CENT_PATH = stable_work_path("kmeans_centroids", _GATE_SF_DIR)
 
 
 @_register(
     "ann_ivf_kmeans_topk",
-    similarity.ivf_topk_sql(
-        f"(SELECT * FROM embeddings WHERE {similarity.well_formed_sql('embedding', 64)})",
-        "vec_id", "embedding", 5,
-        cent_sql=(
-            "SELECT cid, __cent FROM "
-            f"read_parquet('{_KMEANS_CENT_PATH}/*.parquet')"
-        ),
-        assigned_sql=(
-            "SELECT id AS nid, __v, cell FROM ("
-            + _assigned_oracle(_IVF_KM_ASSIGN_PATH)
-            + ")"
-        ),
-        probes_sql=_probes_oracle(_IVF_KM_PROBES_PATH),
-    )
-    + "\nORDER BY qid, rank",
+    _ivf_oracle(
+        _IVF_KM_ASSIGN_PATH,
+        _IVF_KM_PROBES_PATH,
+        cent_sql=f"SELECT cid, __cent FROM read_parquet('{_KMEANS_CENT_PATH}/*.parquet')",
+    ),
 )
 def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5 with Lloyd-refined centroids: three k-means rounds
     (stride init, no RNG, GEMM assignment per round) tighten the cells
-    before the same broadcast-probe search. The refined centroids are
-    materialized to a fixed parquet path and read back before searching,
-    so the search and the oracle consume bitwise-identical centroid
-    values, and (round 10) the final GEMM cell assignment is materialized
-    the same way (_IVF_KM_ASSIGN_PATH) — the hash gate covers probe +
-    search end-to-end, while the refinement itself is pinned by pytest
+    before the same probe + search. The refined centroids, the final
+    GEMM cell assignment and the probe table are materialized
+    (``_ivf_index``), so the search and the oracle consume
+    bitwise-identical values — the hash gate covers probe + search
+    end-to-end, while the refinement itself is pinned by pytest
     (determinism in-session, recall >= the stride path;
-    tests/test_operators.py). Malformed vectors shed at the scan both
-    sides (round-8 probe) — a NaN component would poison the Lloyd mean
-    of its whole cell. Recall rides nprobe (~nprobe/K on unclustered
-    data; measured curve 0.248@2 -> 0.943@24, see similarity.IVF_NPROBE
-    / SCALE.md) — size it before deploying."""
-    emb = similarity.well_formed_vectors(
-        _t(spark, sf_dir, "embeddings"), "embedding", 64
-    )
-    cent_path = stable_work_path("kmeans_centroids", sf_dir)
-    # n_hint (r16): fuses the init-stride count into the init-centroid
-    # collect job — see kmeans_centroids / collect_stride_centroids.
-    # return_matrix (r16b): the Lloyd loop's final means already live on
-    # the driver as the (ids, matrix, norms) triplet — take them directly
-    # instead of re-collecting the frame (was one extra job +
-    # Python-worker round-trip per entry; bit-identity pinned by
-    # tests/test_operators.py::test_kmeans_return_matrix_matches_collect).
-    cent, cent_np = similarity.kmeans_centroids(
-        emb, "vec_id", "embedding", iters=3,
-        n_hint=_footer_rows(sf_dir, "embeddings"),
-        return_matrix=True,
-    )
-
-    def _write_cent() -> None:
-        # repartition(1): the centroid table is driver-sized by
-        # construction (K ~ sqrt(n) rows; the Lloyd loop literally held
-        # it as one numpy matrix on the driver), so parallelize()'s
-        # default slicing would write one near-empty file per core —
-        # pure commit overhead at any scale (guide §6 small-files; round
-        # 15 opt). repartition, NOT coalesce: coalesce(1) funnels all of
-        # createDataFrame's pickled slices through ONE task's sequential
-        # Python-worker round-trips (measured 4+ s for 45 rows); the
-        # repartition shuffle keeps the Python side parallel and the
-        # single write task pure-JVM (0.4 s).
-        cent.repartition(1).write.mode("overwrite").parquet(
-            prepare_stable_dir(cent_path)
-        )
-
-    # Round 16 (opt): ONE centroid matrix shared by assignment + probes
-    # (was one collect job each), taken from the Lloyd loop's own final
-    # triplet (see return_matrix above); the oracle still reads the
-    # materialized bytes, which round-trip float64 exactly. The THREE
-    # independent jobs — the tiny centroid-table write (nothing on the
-    # Spark side reads it back; only the oracle consumes the bytes) and
-    # the two index writes — overlap from a thread pool (§2.6), same
-    # restructure as ann_ivf_topk (see _materialized_probes for the
-    # corpus-fed probe-query bit-identity argument). FIFO scheduling
-    # back-fills the big writes' tails with the small one.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_cent = pool.submit(_write_cent)
-        f_assigned = pool.submit(
-            _materialized_assignment, emb,
-            stable_work_path("ivf_kmeans_assign", sf_dir),
-            centroids=cent, cent_np=cent_np,
-        )
-        f_probes = pool.submit(
-            _materialized_probes, emb, None,
-            stable_work_path("ivf_kmeans_probes", sf_dir),
-            centroids=cent, cent_np=cent_np,
-        )
-        f_cent.result()
-        assigned, probes = f_assigned.result(), f_probes.result()
+    tests/test_operators.py). Recall rides nprobe (~nprobe/K on
+    unclustered data; measured curve 0.248@2 -> 0.943@24, see
+    similarity.IVF_NPROBE / SCALE.md) — size it before deploying."""
+    emb = _embeddings(spark, sf_dir)
+    idx = _ivf_index(emb, sf_dir, "ivf_kmeans", kmeans=True)
     return similarity.ivf_topk(
-        emb, "vec_id", "embedding", 5, centroids=cent, assigned=assigned,
-        probes=probes,
+        emb, "vec_id", "embedding", 5, assigned=idx.assigned, probes=idx.probes
     ).orderBy("qid", "rank")
 
 
@@ -3275,13 +3135,9 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders = _t(spark, sf_dir, "orders").filter(
             F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
         ).select("o_orderkey", "o_orderstatus")
-        # The two bucketed writes are independent jobs; submitting them
-        # from a 2-thread pool lets the second job's tasks back-fill the
-        # executor slots the first job's tail leaves idle (guide §2.6).
-        # Interleaved A/B at sf0.1: 1.71 -> 1.41 s, identical results
-        # (round 15 opt).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # The two bucketed writes are independent jobs; overlapping them
+        # lets the second job's tasks back-fill the executor slots the
+        # first job's tail leaves idle.
         def _write_li():
             li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").mode(
                 "overwrite"
@@ -3292,9 +3148,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).saveAsTable(f"{db}.orders_b")
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_write_li), pool.submit(_write_orders)]:
-                fut.result()
+        run_overlapped(spark, _write_li, _write_orders)
         lb = spark.table(f"{db}.lineitem_b")
         ob = spark.table(f"{db}.orders_b")
         return (
@@ -5631,10 +5485,9 @@ def federated_three_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tmp = work_dir(spark, "federated_three_formats")
 
-    # parallel write inputs (round 15 opt) — see csv_roundtrip — and the
-    # two independent sink writes overlap from a 2-thread pool so the
-    # second job back-fills the first's task tail (guide §2.6;
-    # interleaved A/B 1.59 -> 1.31 s, identical results)
+    # parallel write inputs — see csv_roundtrip — and the two independent
+    # sink writes overlap so the second job back-fills the first's task
+    # tail
     def _write_customer():
         ensure_parallelism(
             _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -5645,17 +5498,11 @@ def federated_three_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
             _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         ).write.mode("overwrite").option("header", "true").csv(f"{tmp}/orders")
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_customer), pool.submit(_write_orders)]:
-            fut.result()
-    # explicit schema (round 15 opt): schema inference is a FULL extra
-    # pass over the JSON files before the query's own scan — at bench
-    # scale a wash (A/B 1.41 vs 1.39 s), at 100 TB a whole corpus read.
-    # The fields are this entry's own write, so the schema is known;
-    # integers infer as bigint, so the frame is type-identical (A/B
-    # asserted row-identical output).
+    run_overlapped(spark, _write_customer, _write_orders)
+    # explicit schema: inference is a FULL extra pass over the JSON
+    # files before the query's own scan. The fields are this entry's own
+    # write, so the schema is known; integers infer as bigint, so the
+    # frame is type-identical to the inferred one.
     cust = spark.read.schema("c_custkey bigint, c_mktsegment string").json(
         f"{tmp}/customer"
     )

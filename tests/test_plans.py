@@ -335,3 +335,69 @@ def test_capped_dedup_census_shapes(spark):
         ) or "SortMergeJoin LeftAnti" not in plan, name
         assert "CartesianProduct" not in plan, name
         assert "SortMergeJoin" not in plan, (name, "pair join lost broadcast")
+
+
+def test_run_overlapped_returns_results_in_submission_order(spark):
+    """Results line up with the thunks, not with completion order: the
+    first thunk finishes last."""
+    import time
+
+    from polario_spark.plans.parallelism import run_overlapped
+
+    def slow():
+        time.sleep(0.3)
+        return "slow"
+
+    assert run_overlapped(spark, slow, lambda: "fast", lambda: 3) == [
+        "slow",
+        "fast",
+        3,
+    ]
+
+
+def test_run_overlapped_surfaces_failure_after_sibling_write(spark, tmp_path):
+    """A failing thunk does not abandon its sibling: the sibling's write
+    (which starts after the failure) completes before the exception
+    surfaces, and with several failures the first in submission order
+    is the one raised, whichever failed first in time."""
+    import time
+
+    import pytest
+
+    from polario_spark.plans.parallelism import run_overlapped
+
+    out = str(tmp_path / "sibling")
+
+    def fail_now():
+        raise ValueError("index write failed")
+
+    def write_later():
+        time.sleep(0.2)
+        spark.range(50).write.mode("overwrite").parquet(out)
+
+    with pytest.raises(ValueError, match="index write failed"):
+        run_overlapped(spark, fail_now, write_later)
+    assert spark.read.parquet(out).count() == 50
+
+    def fail_later():
+        time.sleep(0.2)
+        raise KeyError("first submitted")
+
+    with pytest.raises(KeyError, match="first submitted"):
+        run_overlapped(spark, fail_later, fail_now)
+
+
+def test_run_overlapped_jobs_keep_the_callers_job_group(spark):
+    """Jobs launched inside a thunk run under the caller's job group, so
+    a census or cluster UI attributes overlapped writes to their entry."""
+    from polario_spark.plans.parallelism import run_overlapped
+
+    sc = spark.sparkContext
+    group = "run_overlapped_group_test"
+    sc.setJobGroup(group, "overlap test")
+    try:
+        run_overlapped(spark, lambda: spark.range(10).count())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group)

@@ -11,8 +11,9 @@ roundtrip cost at each scale?
 
 This probe times, in one fresh session per corpus, min-of-2 each:
 
-  a. `materialized` — the registry plan: assign_cells -> write parquet
-     -> read back -> ivf_topk (what bench.py measures);
+  a. `materialized` — the registry plan: the index builder
+     (queries._ivf_index: assign_cells -> write parquet -> read back)
+     -> ivf_topk (what bench.py measures);
   b. `inflight`     — identical search consuming the in-flight
      assignment frame (localCheckpoint severs lineage the same way the
      re-read does, but nothing hits disk);
@@ -49,13 +50,7 @@ def _child() -> None:
 
     from polario_spark import get_spark
     from polario_spark.operators import similarity
-    from polario_spark.queries import _materialized_assignment, _t
-    from polario_spark.workdir import stable_work_path
-
-    # keyed by the PROBE corpus (round 14): writing the gate-baked path
-    # from a tool process is exactly the cross-corpus overwrite race the
-    # corpus-keyed layout removed.
-    _IVF_ASSIGN_PATH = stable_work_path("ivf_stride_assign", corpus_dir)
+    from polario_spark.queries import _footer_rows, _ivf_index, _t
 
     spark = get_spark("ivf_mat_trade")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
@@ -71,14 +66,18 @@ def _child() -> None:
 
     def run_materialized() -> int:
         emb = load()
-        assigned = _materialized_assignment(emb, _IVF_ASSIGN_PATH)
+        # the index path is keyed by the PROBE corpus, never the gate's
+        assigned = _ivf_index(emb, corpus_dir, "ivf_stride", probes=False).assigned
         return similarity.ivf_topk(
             emb, "vec_id", "embedding", 5, assigned=assigned
         ).count()
 
     def run_inflight() -> int:
         emb = load()
-        assigned = similarity.assign_cells(emb, "vec_id", "embedding").select(
+        cent_np = similarity.collect_stride_centroids(
+            emb, n_hint=_footer_rows(corpus_dir, "embeddings")
+        )
+        assigned = similarity.assign_cells(emb, cent_np=cent_np).select(
             "nid", "__v", "cell"
         )
         # localCheckpoint = the same lineage sever the re-read provides,

@@ -1,14 +1,15 @@
-"""Round-15 optimization profiler: per-query build/collect split + plan dump.
+"""Per-query build/collect profiler with a plan dump.
 
-For each named registry query (default: the r14 top offenders), measures
+For each named registry query (default: a fixed list of the slowest
+entries), measures
 - build_s: time for fn(spark, sf_dir) to RETURN the DataFrame — this is
   where eager materializations (parquet index writes, kmeans loops,
   streaming drains, compact lifecycles) spend their time;
 - collect_s: time for .collect() on the returned frame — the declared
   result plan's execution;
-min-of-REPS each, and writes .explain("formatted") to plans/r15/<name>_<tag>.txt.
+min-of-REPS each, and writes .explain("formatted") to OUT_DIR/<name>_<tag>.txt.
 
-Usage: python tools/r15_profile.py [--tag before] [--reps 2] [names...]
+Usage: python tools/query_profile.py OUT_DIR [--tag before] [--reps 2] [names...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 Prints one JSON line with the phase map.
 """
@@ -43,7 +44,9 @@ DEFAULT_NAMES = [
 
 
 def main() -> None:
-    args = sys.argv[1:]
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir, args = sys.argv[1], sys.argv[2:]
     tag = "before"
     reps = 2
     if "--tag" in args:
@@ -57,14 +60,14 @@ def main() -> None:
     names = args or DEFAULT_NAMES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(os.path.join(REPO, "plans", "r15"), exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as entry_mod
     from polario_spark import get_spark
     from polario_spark.plans import release_cached_residue
 
     queries = entry_mod.queries()
-    spark = get_spark("r15_profile")
+    spark = get_spark("query_profile")
     # same warm-up as bench.py so numbers are comparable
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     try:
@@ -81,7 +84,7 @@ def main() -> None:
         builds, collects = [], []
         plan_txt = None
         for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"r15:{name}")
+            spark.sparkContext.setJobDescription(f"profile:{name}")
             b0 = time.perf_counter()
             df = fn(spark, sf_dir)
             builds.append(round(time.perf_counter() - b0, 3))
@@ -94,9 +97,7 @@ def main() -> None:
                 )
             release_cached_residue(spark)
             spark.sparkContext.setJobDescription(None)
-        with open(
-            os.path.join(REPO, "plans", "r15", f"{name}_{tag}.txt"), "w"
-        ) as fh:
+        with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan_txt or "")
         out[name] = {
             "build_s": min(builds),
